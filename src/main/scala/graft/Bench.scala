@@ -16,6 +16,12 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   private val SPREAD_FLAG_RATIO = 3.0
 
+  /** A run id as it may appear in an artifact file name: every character
+    * outside `[A-Za-z0-9_-]` becomes `_`, so no id (`../x`, `a/b`) can
+    * point the file outside the working directory. */
+  def artifactTag(runId: String): String =
+    runId.replaceAll("[^A-Za-z0-9_-]", "_")
+
   private def loadavg(): Seq[Double] =
     try {
       val s = new String(java.nio.file.Files.readAllBytes(
@@ -286,7 +292,8 @@ object Bench {
     // BENCH_FULL_c8.json land in history via the driver's stray-file
     // commit). Pure output-channel addition; the stdout contract and the
     // timing methodology are unchanged.
-    val runTag = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUN_ID", "c" + cpus)
+    val runTag = artifactTag(
+      sys.env.getOrElse("SPARK_GRAFT_BENCH_RUN_ID", "c" + cpus))
     writeTo(s"BENCH_FULL_$runTag.json")
     def fmt3(d: Double) =
       String.format(java.util.Locale.ROOT, "%.3f", Double.box(d))

@@ -1074,7 +1074,10 @@ object Flow {
     * written, with two documented exceptions that are actions by their own
     * semantics: a `scan` buffer's O(partitions) prefix barrier, and a
     * durable `checkpoint(tap)`, which writes the tap during lowering (its
-    * write IS the restart barrier downstream reads from). */
+    * write IS the restart barrier downstream reads from). Source reads run
+    * no job either: a `ParquetTap` takes its schema from one footer read on
+    * the driver, outside the fallbacks its scaladoc lists (pinned in
+    * LoweringSpec). */
   def toDF(p: Pipe)(implicit spark: SparkSession): DataFrame =
     new Lowering(spark).lower(p)
 

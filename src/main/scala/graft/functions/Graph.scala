@@ -582,98 +582,102 @@ object Graph {
     // partition), capped by the session setting
     val e0 = edges.select(col("src"), col("dst")).distinct()
       .localCheckpoint(false)
-    val edgeRows = e0.count()
-    val shufP = edges.sparkSession.sessionState.conf.numShufflePartitions
-    val loopP = math.max(1L, math.min(shufP.toLong,
-      (edgeRows + 999999L) / 1000000L)).toInt
-    val e = Dedup.checkpointPartitioned(e0, loopP, col("src"))
-    val eByDst = Dedup.checkpointPartitioned(e, loopP, col("dst"))
-    var e0Released = false
-    def normAuth(raw: DataFrame): DataFrame = {
-      val m = raw.agg(max(col("ar")).as("amax"))
-      raw.crossJoin(broadcast(m))
-        .select(col("dst"),
-          expr("CAST(ar * 1000000000 div amax AS BIGINT)").as("a"))
-    }
-    def normHub(raw: DataFrame): DataFrame = {
-      val m = raw.agg(max(col("hr")).as("hmax"))
-      raw.crossJoin(broadcast(m))
-        .select(col("src"),
-          expr("CAST(hr * 1000000000 div hmax AS BIGINT)").as("h"))
-    }
-    // EVERY round's auth/hub ends in a localCheckpoint: normAuth/
-    // normHub reference their input TWICE (the table and its 1-row max),
-    // so without per-round LogicalRDD truncation the analyzed plan
-    // doubles per half-step — 2^rounds nodes OOMs the driver by round
-    // ~10 (the duplicatedSpans multi-reference lineage trap; persist
-    // caches data, never the plan). r17: BOTH half-steps checkpoint
-    // LAZILY — ONE action per round (the fixed-point probe), which
-    // materializes the round's auth AND the previous round's hub in the
-    // same job. Lazy blocks must never outlive what they read, so each
-    // frame is released only after the NEXT probe action has provably
-    // materialized everything referencing it: the previous auth right
-    // after the probe (the current hub — its only lazy reader — was
-    // materialized by the same probe), and a hub one full round later
-    // (`spentHub`). Released root-only (releaseRoot — the r16
-    // releaseLabels lesson).
-    var auth: DataFrame = initAuth.map(_.select(col("dst"), col("a"))
-      .localCheckpoint(true)).orNull
-    var hub = (initAuth match {
-      case Some(_) =>
-        normHub(eByDst.join(auth, Seq("dst"))
-          .groupBy(col("src"))
-          .agg(sum(col("a")).cast("decimal(38,0)").as("hr")))
-      case None =>
-        e.select(col("src")).distinct()
-          .select(col("src"), lit(1000000000L).as("h"))
-    }).localCheckpoint(false)
-    var spentHub: DataFrame = null
-    var rounds = -1
-    var i = 0
-    while (rounds < 0 && i < maxIters) {
-      i += 1
-      val nextAuth = normAuth(
-        e.join(hub, Seq("src"))
-          .groupBy(col("dst"))
-          .agg(sum(col("h")).cast("decimal(38,0)").as("ar")))
-        .localCheckpoint(false)
-      val fixed = auth != null &&
-        nextAuth.as("n").join(auth.as("o"), Seq("dst"), "full")
-          .filter(col("n.a").isNull || col("o.a").isNull ||
-            col("n.a") =!= col("o.a"))
-          .limit(1).isEmpty
-      if (auth != null) {
-        // the probe above ran: it materialized nextAuth, hence also the
-        // current hub (nextAuth reads it) and the spent hub's last
-        // reader — both releases are now safe. Round 1 cold-start runs
-        // no probe (auth == null): nothing is materialized yet and
-        // nothing may be released.
-        releaseRoot(spentHub); spentHub = null
-        releaseRoot(auth)
-        // the first probe also proves BOTH partitioned copies are
-        // materialized (the hub it computed reads eByDst, which reads e,
-        // which reads e0) — the unpartitioned staging copy can go
-        if (!e0Released) { releaseRoot(e0); e0Released = true }
+    // every checkpointed frame is released on every exit path: the
+    // non-convergence require below and any failed action included
+    var e, eByDst, auth, hub, spentHub: DataFrame = null
+    try {
+      val edgeRows = e0.count()
+      val shufP = edges.sparkSession.sessionState.conf.numShufflePartitions
+      val loopP = math.max(1L, math.min(shufP.toLong,
+        (edgeRows + 999999L) / 1000000L)).toInt
+      e = Dedup.checkpointPartitioned(e0, loopP, col("src"))
+      eByDst = Dedup.checkpointPartitioned(e, loopP, col("dst"))
+      var e0Released = false
+      def normAuth(raw: DataFrame): DataFrame = {
+        val m = raw.agg(max(col("ar")).as("amax"))
+        raw.crossJoin(broadcast(m))
+          .select(col("dst"),
+            expr("CAST(ar * 1000000000 div amax AS BIGINT)").as("a"))
       }
-      auth = nextAuth
-      if (fixed) rounds = i
-      else {
-        val nextHub = normHub(
-          eByDst.join(nextAuth, Seq("dst"))
+      def normHub(raw: DataFrame): DataFrame = {
+        val m = raw.agg(max(col("hr")).as("hmax"))
+        raw.crossJoin(broadcast(m))
+          .select(col("src"),
+            expr("CAST(hr * 1000000000 div hmax AS BIGINT)").as("h"))
+      }
+      // EVERY round's auth/hub ends in a localCheckpoint: normAuth/
+      // normHub reference their input TWICE (the table and its 1-row max),
+      // so without per-round LogicalRDD truncation the analyzed plan
+      // doubles per half-step — 2^rounds nodes OOMs the driver by round
+      // ~10 (the duplicatedSpans multi-reference lineage trap; persist
+      // caches data, never the plan). r17: BOTH half-steps checkpoint
+      // LAZILY — ONE action per round (the fixed-point probe), which
+      // materializes the round's auth AND the previous round's hub in the
+      // same job. Lazy blocks must never outlive what they read, so each
+      // frame is released only after the NEXT probe action has provably
+      // materialized everything referencing it: the previous auth right
+      // after the probe (the current hub — its only lazy reader — was
+      // materialized by the same probe), and a hub one full round later
+      // (`spentHub`). Released root-only (releaseRoot — the r16
+      // releaseLabels lesson).
+      auth = initAuth.map(_.select(col("dst"), col("a"))
+        .localCheckpoint(true)).orNull
+      hub = (initAuth match {
+        case Some(_) =>
+          normHub(eByDst.join(auth, Seq("dst"))
             .groupBy(col("src"))
             .agg(sum(col("a")).cast("decimal(38,0)").as("hr")))
+        case None =>
+          e.select(col("src")).distinct()
+            .select(col("src"), lit(1000000000L).as("h"))
+      }).localCheckpoint(false)
+      var rounds = -1
+      var i = 0
+      while (rounds < 0 && i < maxIters) {
+        i += 1
+        val nextAuth = normAuth(
+          e.join(hub, Seq("src"))
+            .groupBy(col("dst"))
+            .agg(sum(col("h")).cast("decimal(38,0)").as("ar")))
           .localCheckpoint(false)
-        spentHub = hub
-        hub = nextHub
+        val fixed = auth != null &&
+          nextAuth.as("n").join(auth.as("o"), Seq("dst"), "full")
+            .filter(col("n.a").isNull || col("o.a").isNull ||
+              col("n.a") =!= col("o.a"))
+            .limit(1).isEmpty
+        if (auth != null) {
+          // the probe above ran: it materialized nextAuth, hence also the
+          // current hub (nextAuth reads it) and the spent hub's last
+          // reader — both releases are now safe. Round 1 cold-start runs
+          // no probe (auth == null): nothing is materialized yet and
+          // nothing may be released.
+          releaseRoot(spentHub); spentHub = null
+          releaseRoot(auth)
+          // the first probe also proves BOTH partitioned copies are
+          // materialized (the hub it computed reads eByDst, which reads e,
+          // which reads e0) — the unpartitioned staging copy can go
+          if (!e0Released) { releaseRoot(e0); e0Released = true }
+        }
+        auth = nextAuth
+        if (fixed) rounds = i
+        else {
+          val nextHub = normHub(
+            eByDst.join(nextAuth, Seq("dst"))
+              .groupBy(col("src"))
+              .agg(sum(col("a")).cast("decimal(38,0)").as("hr")))
+            .localCheckpoint(false)
+          spentHub = hub
+          hub = nextHub
+        }
       }
+      require(rounds > 0, s"hitsConverge: no exact fixed point within " +
+        s"$maxIters iterations — raise maxIters or inspect the graph " +
+        "for a floor-map cycle")
+      (auth.select(col("dst"), col("a")).localCheckpoint(true), rounds)
+    } finally {
+      releaseRoot(eByDst); releaseRoot(e); releaseRoot(e0)
+      releaseRoot(spentHub); releaseRoot(hub); releaseRoot(auth)
     }
-    require(rounds > 0, s"hitsConverge: no exact fixed point within " +
-      s"$maxIters iterations — raise maxIters or inspect the graph " +
-      "for a floor-map cycle")
-    val res = auth.select(col("dst"), col("a")).localCheckpoint(true)
-    releaseRoot(eByDst); releaseRoot(e); releaseRoot(e0)
-    releaseRoot(spentHub); releaseRoot(hub); releaseRoot(auth)
-    (res, rounds)
   }
 
   def hitsTopK(edges: DataFrame, iters: Int = 2, k: Int = 20): DataFrame = {

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.functions.{Dedup, Similarity, TextAnalysis => TA}
+import graft.sources.ParquetTap
 
 /** Training-data-pipeline extension queries: text analysis, dedup,
   * similarity search, multimodal plumbing, sessionization, windowed
@@ -463,7 +464,7 @@ object Extensions {
     // by round 8 -> both sides stop at exactly 8 rounds and still match
     "q64_minhash_transitive" -> ((s, dir) =>
       Dedup.minhashClustersTransitive(
-        s.read.parquet(s"$dir/documents.parquet"), "doc_id", "text",
+        ParquetTap(s"$dir/documents.parquet").read(s), "doc_id", "text",
         k = 16, bands = 4, maxIters = 8)),
 
     "q26_simhash" -> ((s, dir) => {
@@ -708,7 +709,7 @@ object Extensions {
     // deterministic SET of surviving content hashes (= batch DISTINCT).
     "q80_stream_dedup" -> ((s, dir) => {
       val (in, out, chk) = freshStreamDirs("graft_q80_stream")
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = ParquetTap(s"$dir/documents.parquet").read(s)
         .select(col("doc_id"), col("text"))
         // offset the synthetic event time away from epoch 0: a ts equal to
         // the initial watermark value is border-dropped by the dedup state
@@ -728,7 +729,9 @@ object Extensions {
           .start()
         q.awaitTermination()
       }
-      s.read.parquet(out)
+      // the file sink's _spark_metadata log takes the tap's fallback
+      // (Spark's own index), so only committed files are read
+      ParquetTap(out).read(s)
     }),
 
     // --- grouping sets (absent from reference — SURVEY §2.4 last row) -----

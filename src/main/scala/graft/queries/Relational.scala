@@ -424,7 +424,7 @@ object Relational {
             args = FieldSelector.All, out = FieldSelector.All,
             trap = Some(ParquetTap(trapPath))))(s)
       } finally s.conf.set("spark.sql.ansi.enabled", prevAnsi)
-      s.read.parquet(trapPath).select(col("doc_id"))
+      ParquetTap(trapPath).read(s).select(col("doc_id"))
     }),
 
     // Trap on the bufferJoin cogroup gate: key groups whose closure throws
@@ -446,7 +446,7 @@ object Relational {
               Iterator.single(Seq(key.head, n))
             },
             trap = Some(ParquetTap(trapPath))))(s)
-      s.read.parquet(trapPath).select(col("c_custkey"))
+      ParquetTap(trapPath).read(s).select(col("c_custkey"))
     }),
 
     // Custom CAggregator (start/aggregate/merge/complete) under the gate
@@ -466,7 +466,7 @@ object Relational {
           .groupBy("o_orderpriority")
           .everyAgg(new PoisonSpanAggregator, trap = Some(ParquetTap(trapPath))))(s)
       main.withColumn("side", lit("ok"))
-        .unionByName(s.read.parquet(trapPath)
+        .unionByName(ParquetTap(trapPath).read(s)
           .select(col("o_orderpriority"),
             lit(null).cast("double").as("span"), lit("trap").as("side")))
     }),
@@ -672,7 +672,7 @@ object Relational {
         (branchA, sinkA, graft.sources.SinkMode.Replace),
         (branchB, sinkB, graft.sources.SinkMode.Replace)))(s)
       def cnt(t: ParquetTap, label: String) =
-        s.read.parquet(t.path).agg(count(lit(1)).as("n"))
+        t.read(s).agg(count(lit(1)).as("n"))
           .select(lit(label).as("part"), col("n"))
       cnt(sinkA, "a_ok").unionAll(cnt(trapA, "a_trap"))
         .unionAll(cnt(sinkB, "b_ok")).unionAll(cnt(trapB, "b_trap"))
@@ -707,7 +707,7 @@ object Relational {
     // so the exact-decimal sum matches the oracle computed from parquet.
     "q73_dynamic_arity" -> ((s, dir) => {
       val txt = stagePath("graft_q73_text", dir)
-      val lines = s.read.parquet(s"$dir/orders.parquet")
+      val lines = T(dir, "orders").read(s)
         .select(concat_ws("|",
           col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"),
           when(col("o_orderstatus") === "F", lit("LATE"))).as("line"))
@@ -743,10 +743,10 @@ object Relational {
         Seq("o_custkey"), Seq("o_custkey"))
       val ct = graft.sources.BucketedTap(ctN, 8,
         Seq("c_custkey"), Seq("c_custkey"))
-      ot.write(s.read.parquet(s"$dir/orders.parquet")
+      ot.write(T(dir, "orders").read(s)
         .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice")),
         graft.sources.SinkMode.Replace)
-      ct.write(s.read.parquet(s"$dir/customer.parquet")
+      ct.write(T(dir, "customer").read(s)
         .select(col("c_custkey"), col("c_mktsegment")),
         graft.sources.SinkMode.Replace)
       val threshold = s.conf.get("spark.sql.autoBroadcastJoinThreshold")

@@ -14,7 +14,7 @@ object Tables {
     * entry point pins the session timezone to UTC, so the NTZ→TZ cast is
     * value-preserving and keeps matching the DuckDB oracle (itself NTZ). */
   def events(s: SparkSession, dir: String): DataFrame = {
-    val df = s.read.parquet(s"$dir/events.parquet")
+    val df = graft.sources.ParquetTap(s"$dir/events.parquet").read(s)
     df.schema("ts").dataType match {
       case LongType =>
         // integer div: ns values (~1.7e18) exceed double's 2^53 exact range

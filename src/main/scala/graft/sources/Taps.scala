@@ -1,6 +1,7 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetSchemaBridge
 import org.apache.spark.sql.types.{StructField, StructType}
 
 /** Sink modes — Spark-native equivalent of the reference's `SinkMode`
@@ -29,10 +30,23 @@ sealed trait Tap {
   def numSinkParts: Option[Int] = None
 }
 
+/** Parquet scheme. Like the reference, where the tap's Scheme supplies the
+  * source fields and planning runs nothing, a read fires no Spark job: the
+  * schema comes from one footer read on the driver — the one Spark's own
+  * inference would read (first `_common_metadata`, else `_metadata`, else
+  * the first data file in path order) — every time, so a path rewritten by
+  * `SinkMode.Replace` is never read with a stale schema. Spark infers the
+  * schema itself (one job) when `mergeSchema` is on (option or session
+  * conf), for a glob, a missing path, a directory with subdirectories
+  * (partition layouts, streaming-sink output), or an option that changes
+  * the file listing (see `ParquetSchemaBridge`). */
 final case class ParquetTap(path: String, parts: Option[Int] = None) extends Tap {
-  def read(spark: SparkSession): DataFrame = spark.read.parquet(path)
-  override def read(spark: SparkSession, options: Map[String, String]): DataFrame =
-    spark.read.options(options).parquet(path)
+  def read(spark: SparkSession): DataFrame = read(spark, Map.empty)
+  override def read(spark: SparkSession, options: Map[String, String]): DataFrame = {
+    val r = spark.read.options(options)
+    ParquetSchemaBridge.footerSchema(spark, path, options)
+      .fold(r)(r.schema).parquet(path)
+  }
   def write(df: DataFrame, mode: SinkMode): Unit = {
     val out = parts.fold(df)(n => df.repartition(n))
     out.write.mode(mode.toSaveMode).parquet(path)

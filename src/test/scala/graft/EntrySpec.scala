@@ -17,6 +17,12 @@ class EntrySpec extends SparkSpec {
     assert(missing == Set("q42_approx_distinct", "q54_sample",
       "q89_approx_percentile"))
   }
+  test("Bench artifact tag keeps a run id inside the working directory") {
+    assert(Bench.artifactTag("../x") == "___x")
+    assert(Bench.artifactTag("c4_run-2") == "c4_run-2")
+    val f = new java.io.File(s"BENCH_FULL_${Bench.artifactTag("../../a/b")}.json")
+    assert(f.getParent == null, f.getPath)
+  }
   test("oracle map has no orphan keys") {
     assert((SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet).isEmpty)
   }

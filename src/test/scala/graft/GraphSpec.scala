@@ -111,6 +111,25 @@ class GraphSpec extends SparkSpec {
     assert(ex.getMessage.contains("fixed point"))
   }
 
+  test("hitsConverge: non-convergence releases every checkpointed frame " +
+       "before it fails") {
+    val edges = ((0L until 10L).flatMap(i => Seq((i, "x"), (i, "y"))) ++
+      (0L until 3L).map(i => (i, "z"))).toDF("src", "dst")
+    val sc = spark.sparkContext
+    // cold start (no probe runs in round 1) and a warm start far from the
+    // fixed point (the round-1 probe runs and releases in the loop)
+    val warm = Seq(("x", 1L), ("y", 1L), ("z", 1000000000L)).toDF("dst", "a")
+    Seq(None, Some(warm)).foreach { init =>
+      val before = sc.getPersistentRDDs.keySet
+      val ex = intercept[IllegalArgumentException] {
+        Graph.hitsConverge(edges, init, maxIters = 1)
+      }
+      assert(ex.getMessage.contains("fixed point"))
+      assert(sc.getPersistentRDDs.keySet == before,
+        s"leaked: ${sc.getPersistentRDDs.keySet -- before}")
+    }
+  }
+
   test("pageRankConverge: tolerance stop, agreement with the unrolled " +
        "update, warm-from-converged stops immediately, directed failure") {
     // complete K3 is an EXACT fixed point of the scaled update (every

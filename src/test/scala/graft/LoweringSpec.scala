@@ -704,4 +704,29 @@ class LoweringSpec extends SparkSpec {
     lhs.rdd.foreach(_ => acc.add(1))
     assert(counters.value("graft", "rows_seen") == 4L)
   }
+
+  test("Flow.toDF over ParquetTap sources starts no Spark job: CoGroup, " +
+       "n-way HashJoin, Merge") {
+    def src(t: String) = Pipe.source(graft.sources.ParquetTap(s"${sf()}/$t.parquet"))
+    val cogroup = src("orders")
+      .coGroup(Seq("o_custkey"), src("customer"), Seq("c_custkey"))
+      .groupBy("c_mktsegment")
+      .every(Aggs.sum("o_totalprice", "total"), Aggs.count("n_orders"))
+    val hashJoin = src("lineitem")
+      .hashJoin(Seq("l_suppkey"), src("supplier"), Seq("s_suppkey"))
+      .hashJoin(Seq("s_nationkey"), src("nation"), Seq("n_nationkey"))
+      .hashJoin(Seq("n_regionkey"), src("region"), Seq("r_regionkey"))
+      .groupBy("r_name", "n_name")
+      .every(Aggs.count("n_items"))
+    val merge = src("orders").filterBy(SqlFilter("o_orderstatus = 'F'"))
+      .merge(src("orders").filterBy(SqlFilter("o_totalprice > 100000")))
+      .groupBy("o_orderstatus")
+      .every(Aggs.count("n"))
+    Seq("cogroup" -> cogroup, "hashJoin" -> hashJoin, "merge" -> merge)
+      .foreach { case (name, p) =>
+        val (df, jobs) = withJobCount(Flow.toDF(p))
+        assert(jobs == 0, s"$name: $jobs job(s) started while lowering")
+        assert(df.count() > 0, name)
+      }
+  }
 }

@@ -362,4 +362,99 @@ class TapsSpec extends SparkSpec {
       .buffer(b)
     assert(Flow.toDF(p).collect().head.getString(1) == "a,bb,ccc")
   }
+
+  // ParquetTap reads its schema from one footer on the driver; Spark's own
+  // inference (s.read.parquet) is the reference it must match
+  private def sameAsSpark(tapDf: org.apache.spark.sql.DataFrame,
+                          sparkDf: org.apache.spark.sql.DataFrame): Unit = {
+    assert(tapDf.schema == sparkDf.schema)
+    assert(tapDf.toJSON.collect().sorted.toSeq ==
+      sparkDf.toJSON.collect().sorted.toSeq)
+  }
+
+  test("parquet tap schema: every sf0.001 table matches Spark's inference " +
+       "and the read starts no job") {
+    val tables = new java.io.File(sf()).listFiles()
+      .filter(_.getName.endsWith(".parquet")).map(_.getPath).sorted
+    assert(tables.length >= 7)
+    tables.foreach { p =>
+      val (df, jobs) = withJobCount(ParquetTap(p).read(spark))
+      assert(jobs == 0, p)
+      sameAsSpark(df, spark.read.parquet(p))
+    }
+  }
+
+  test("parquet tap schema: multi-part directory written by the tap") {
+    val out = s"${tmp()}/parts"
+    val df = (1 to 200).map(i => (i.toLong, s"v$i", i % 3 == 0))
+      .toDF("id", "v", "flag")
+    ParquetTap(out, parts = Some(3)).write(df, SinkMode.Replace)
+    assert(new java.io.File(out).list().count(_.endsWith(".parquet")) == 3)
+    val (back, jobs) = withJobCount(ParquetTap(out).read(spark))
+    assert(jobs == 0)
+    sameAsSpark(back, spark.read.parquet(out))
+    assert(back.count() == 200)
+  }
+
+  test("parquet tap schema: a path rewritten by SinkMode.Replace reads " +
+       "with the new schema") {
+    val out = s"${tmp()}/replaced"
+    val tap = ParquetTap(out)
+    tap.write(Seq((1, "a")).toDF("n", "c"), SinkMode.Replace)
+    assert(tap.read(spark).columns.toSeq == Seq("n", "c"))
+    tap.write(Seq((2.5, 7L, true)).toDF("x", "y", "z"), SinkMode.Replace)
+    val back = tap.read(spark)
+    assert(back.columns.toSeq == Seq("x", "y", "z"))
+    sameAsSpark(back, spark.read.parquet(out))
+  }
+
+  test("parquet tap schema: mergeSchema (option or session conf) merges " +
+       "every part's schema") {
+    val out = s"${tmp()}/merged"
+    ParquetTap(out).write(Seq((1L, "a")).toDF("id", "a"), SinkMode.Replace)
+    ParquetTap(out).write(Seq((2L, 3.0)).toDF("id", "b"), SinkMode.Update)
+    val opt = Map("mergeSchema" -> "true")
+    val back = ParquetTap(out).read(spark, opt)
+    assert(back.columns.toSet == Set("id", "a", "b"))
+    sameAsSpark(back, spark.read.options(opt).parquet(out))
+    val key = "spark.sql.parquet.mergeSchema"
+    val prev = spark.conf.getOption(key)
+    try {
+      spark.conf.set(key, "true")
+      sameAsSpark(ParquetTap(out).read(spark), spark.read.parquet(out))
+      assert(ParquetTap(out).read(spark).columns.toSet == Set("id", "a", "b"))
+    } finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
+  test("parquet tap schema: a missing path raises Spark's exception") {
+    val missing = s"${tmp()}/absent"
+    val tapErr = intercept[Throwable](ParquetTap(missing).read(spark))
+    val sparkErr = intercept[Throwable](spark.read.parquet(missing))
+    assert(tapErr.getClass == sparkErr.getClass)
+    assert(tapErr.getMessage == sparkErr.getMessage)
+  }
+
+  test("parquet tap schema: streaming-sink output reads only committed " +
+       "rows") {
+    val base = tmp()
+    val (in, out) = (s"$base/in", s"$base/out")
+    val df = (1 to 20).map(i => (i.toLong, s"t$i")).toDF("id", "t")
+    df.write.parquet(in)
+    spark.readStream.schema(df.schema).parquet(in)
+      .writeStream.format("parquet").option("path", out)
+      .option("checkpointLocation", s"$base/chk")
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .start().awaitTermination()
+    // a part file the sink never committed (a failed batch's leftover):
+    // the _spark_metadata log excludes it
+    Seq((99L, "stray")).toDF("id", "t").coalesce(1).write.parquet(s"$base/stray")
+    val strayPart = new java.io.File(s"$base/stray").listFiles()
+      .find(_.getName.endsWith(".parquet")).get
+    java.nio.file.Files.copy(strayPart.toPath,
+      new java.io.File(out, "part-99999-uncommitted.parquet").toPath)
+    val back = ParquetTap(out).read(spark)
+    sameAsSpark(back, spark.read.parquet(out))
+    assert(back.count() == 20)
+    assert(back.filter($"id" === 99L).isEmpty)
+  }
 }
